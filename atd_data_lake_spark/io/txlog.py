@@ -19,19 +19,24 @@ A snapshot is the replay of adds/removes up to a version.  Readers
 resolve the snapshot ONCE (a driver-side listing of the log — metadata,
 not data) and then read a fixed file list: concurrent commits cannot
 tear a read.  Writers are copy-on-write: MERGE rewrites only files that
-contain matched keys (file pruning via an ``input_file_name`` semi-join
-— at scale this is the min/max-stats pruning every table format does;
-the log records file-level add/remove, so untouched files are never
-rewritten or even opened by the commit).
+contain matched keys, the log records file-level add/remove, and
+untouched files are never rewritten.
 
 Every commit also records per-file column MIN/MAX harvested from the
 parquet footers of its adds (zero data reads — the writer already
-computed them), and ``pruned_files``/``read_where`` use those stats for
-query-side FILE SKIPPING: a selective range/equality predicate on a
-clustered-write column opens only overlapping files, with the residual
-predicate keeping results exact whether or not stats exist (r8; the
-read-side half of Delta-style data skipping — ``operators/layout.py``'s
-Z-order clustering is the write-side half that makes ranges tight).
+computed them).  Both sides use them:
+
+* MERGE picks its candidate files from the stats, as Delta does: the
+  source is written first, its new files' footers bound its keys, and
+  only snapshot files whose recorded ranges overlap that box are opened
+  — an ``input_file_name`` semi-join over the candidates then confirms
+  which ones hold matched keys;
+* ``pruned_files``/``read_where`` do query-side FILE SKIPPING: a
+  selective range/equality predicate on a clustered-write column opens
+  only overlapping files, with the residual predicate keeping results
+  exact whether or not stats exist (r8; the read-side half of
+  Delta-style data skipping — ``operators/layout.py``'s Z-order
+  clustering is the write-side half that makes ranges tight).
 
 Spark-first stance: the MERGE itself is still declared as DataFrame ops
 (anti-join + union — exactly what Delta's MERGE physically plans); this
@@ -723,9 +728,9 @@ def _norm_file(uri: str) -> str:
 
 
 def _touched_removes(spark, table, files, keyset, on):
-    """TABLE-RELATIVE paths of snapshot files holding any row matching
-    ``keyset`` on ``on`` — the copy-on-write pruning shared by merge and
-    delete_keys (one semi-join; file-level min/max stats at scale).
+    """TABLE-RELATIVE paths of ``files`` holding any row matching
+    ``keyset`` on ``on`` — the copy-on-write pruning shared by merge
+    (over its stats-picked candidates) and delete_keys (one semi-join).
     Raises rather than returning incomplete removes when a touched URI
     fails to resolve back to a snapshot path (percent-encoded /
     scheme-variant paths on non-local filesystems) — committing with
@@ -754,6 +759,58 @@ def _touched_removes(spark, table, files, keyset, on):
     )
 
 
+def _num_rows(table: str, rel: str) -> int | None:
+    """Row count from a parquet footer (None when unreadable)."""
+    import pyarrow.parquet as pq
+
+    try:
+        return pq.read_metadata(os.path.join(table, rel)).num_rows
+    except (OSError, ValueError):  # unknown is never "empty"
+        return None
+
+
+def _key_bounds(
+    table: str, schema, new: list[str], new_stats: dict, on: list[str]
+) -> dict | None:
+    """``column: (lo, hi)`` bounding box of the MERGE source's keys, for
+    :func:`_kept_files`, from the footer stats of the files the source
+    was just written to; None when those files hold no row at all
+    (nothing can match).  Empty files — Spark writes one for an empty
+    first partition — bound nothing and are skipped.  A key column is
+    bounded only when every non-empty file recorded its min/max and its
+    type compares in the stats exactly as the join compares it:
+    integers, dates, timestamps and binary-collated strings.
+    Floating-point keys are never bounded — parquet writers may leave
+    NaN out of min/max while Spark's join matches NaN to NaN — so a
+    bound could drop a file holding a match."""
+    from pyspark.sql import types as T
+
+    per_file = [
+        new_stats.get(f, {})
+        for f in new
+        if f in new_stats or _num_rows(table, f) != 0
+    ]
+    if not per_file:
+        return None
+    exact = (T.IntegralType, T.DateType, T.TimestampType, T.TimestampNTZType)
+    bounds = {}
+    for col in on:
+        dt = schema[col].dataType
+        if not (
+            isinstance(dt, exact)
+            or (isinstance(dt, T.StringType) and dt.collation == "UTF8_BINARY")
+        ):
+            continue
+        col_stats = [s.get(col) for s in per_file]
+        if any(st is None for st in col_stats):
+            continue
+        bounds[col] = (
+            min(st["min"] for st in col_stats),
+            max(st["max"] for st in col_stats),
+        )
+    return bounds
+
+
 def merge(
     spark: SparkSession,
     table: str,
@@ -765,15 +822,25 @@ def merge(
     UPDATE SET * WHEN NOT MATCHED THEN INSERT *`` — the reference
     catalog's upsert-on-PK contract, as a copy-on-write commit.
 
-    Copy-on-write file pruning: a leftsemi join of the snapshot (tagged
-    with ``input_file_name``) against the distinct source keys names the
-    files that hold matched rows — ONLY those are rewritten (their
-    unmatched rows carried over via anti-join, matched rows replaced by
-    source) plus one add for source rows.  Untouched files are not
-    opened by the write path and stay byte-identical.  The key semi-join
-    is the one data-sized exchange; at 100 TB the same pruning runs off
-    file-level min/max stats without scanning, and source keys broadcast
-    while they fit.
+    ``source`` is written FIRST, as the commit's first add, so its
+    lineage runs exactly once; its keys are read back from those files
+    (with the known ``source.schema``: no inference job).
+
+    Copy-on-write file pruning in two steps: the footer min/max stats of
+    the new files bound the source's keys, and the snapshot files whose
+    recorded stats miss that box are dropped without being opened (the
+    Delta-style candidate pick, :func:`_kept_files`).  A leftsemi join
+    of the surviving candidates (tagged with ``input_file_name``)
+    against the keys then confirms which files hold matched rows — ONLY
+    those are rewritten (their unmatched rows carried over via
+    anti-join, matched rows replaced by the source rows already
+    written), as a second add.  Untouched files stay byte-identical.
+    Keys without usable stats (floating point, INT96 timestamps, a
+    failed harvest) simply don't prune; the semi-join stays exact
+    either way, and source keys broadcast while they fit.  The stats
+    of source and table are compared as values of one type: the
+    source's key columns carry the table's column types, as the rows of
+    any source the table stores do.
     """
     table = _canon(table)
     if commit_id is not None:
@@ -781,23 +848,32 @@ def merge(
         if seen is not None:
             return CommitResult(seen, 0, 0, replayed=True)
     base = current_version(table)
-    files = snapshot_files(table, base)
-    if not files:
-        adds = _write_data_files(source, table)
-        return commit(table, adds, [], "merge", base, commit_id)
+    active, stats = _replay_active_stats(table, base)
+    new = _write_data_files(source, table)
+    if not active or not new:
+        return commit(table, new, [], "merge", base, commit_id)
 
-    keys = source.select(*on).distinct()
-    removes = _touched_removes(spark, table, files, keys, on)
-
+    new_stats = _harvest_stats(table, new)
+    # no distinct(): the semi- and anti-joins below ignore repeated keys,
+    # and deduplicating would cost a shuffle
+    keys = (
+        spark.read.schema(source.schema)
+        .parquet(*[os.path.join(table, f) for f in new])
+        .select(*on)
+    )
+    box = _key_bounds(table, source.schema, new, new_stats, on)
+    candidates = [] if box is None else _kept_files(table, active, stats, box)
+    removes = (
+        _touched_removes(spark, table, candidates, keys, on)
+        if candidates else []
+    )
+    adds = new
     if removes:
         carried = (
             spark.read.parquet(*[os.path.join(table, r) for r in removes])
             .join(F.broadcast(keys), on, "left_anti")
         )
-        rewritten = carried.unionByName(source)
-    else:
-        rewritten = source
-    adds = _write_data_files(rewritten, table)
+        adds = new + _write_data_files(carried, table)
     return commit(table, adds, removes, "merge", base, commit_id)
 
 
@@ -984,9 +1060,10 @@ def delete_keys(
     pipeline runs ``delete_keys`` then ``vacuum`` past its retention
     window, same as Delta.
 
-    100 TB shape: identical to merge's — one broadcast-or-semi join
-    prunes to touched files (file-level min/max stats at scale), rewrite
-    cost ∝ touched data, commit is metadata-sized.
+    100 TB shape: one broadcast semi-join over the snapshot names the
+    touched files (unlike merge, whose keys are written first and so
+    come with footer stats to pick candidates, ``keys`` here is any
+    frame), rewrite cost ∝ touched data, commit is metadata-sized.
     """
     table = _canon(table)
     if commit_id is not None:

@@ -63,8 +63,10 @@ def mb_item_cf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     the whole pair generation per direction), the per-part margins
     aggregate their own singleton slice directly instead of filtering a
     3-way sentinel union (whose executed plan re-evaluated every branch
-    per consumer), and the catalog-sized margin frame is persisted
-    because the runtime builds the two margin broadcasts separately.
+    per consumer).  The catalog-sized margin frame is NOT persisted:
+    the runtime builds the two margin broadcasts separately, and each
+    re-derives the slice through a ReusedExchange of the one basket
+    shuffle, which is cheaper than a cache's own basket shuffle.
     """
     from atd_data_lake_spark.round4_queries import basket_count_slices
 

@@ -1446,10 +1446,11 @@ def mb_affinity_npmi(spark: SparkSession, sf_dir: str) -> DataFrame:
         / -F.log(p_ab),
         6,
     )
-    # both margin joins broadcast the persisted catalog-sized margin
-    # frame (the runtime builds the two BroadcastExchanges separately —
-    # executed-plan finding r10 — so the cache, not broadcast reuse, is
-    # what keeps the margin slice from recomputing)
+    # both margin joins broadcast the UN-persisted catalog-sized margin
+    # frame: the runtime builds the two BroadcastExchanges separately
+    # (executed-plan finding r10), and each re-derives the margin slice
+    # through a ReusedExchange of the one basket shuffle — cheaper than
+    # a cache, whose build would run its own basket shuffle
     pn = F.broadcast(part_n)
     return (
         pair_n.join(pn, F.col("a") == F.col("pk"))

@@ -9,12 +9,19 @@ One run = plan → transform → write → record:
    ``-o`` tee output dir — etl_app.py:98-197);
 2. plan = the J1 incremental anti-join of the source catalog listing
    against the target listing (``operators/incremental.py``) — the whole
-   date range in ONE join, not a per-item driver loop;
+   date range in ONE join, not a per-item driver loop.  The plan is
+   catalog-sized, so it is resolved ONCE on the driver (one Arrow
+   collect) and handed on as a local relation: the empty-plan gate, the
+   planned count, the transform's reads of the plan and the catalog
+   advance reuse those rows instead of re-running the anti-join;
 3. transform = the registered pure DataFrame function for the stage;
-4. write = partitioned layer write + catalog upsert + perfmet job row;
-   ``simulate`` runs 1–3 and skips every write (storage.py:132-148's
-   semantics), ``debug`` targets ``<layer>-test`` paths
-   (config_app.py:21-28).
+4. write = partitioned layer write + catalog advance: ``run_stage``
+   returns the upserted catalog as a frame (``StageRun.catalog``); the
+   caller stores it (``catalog.upsert_table``) and emits the perfmet job
+   row (``pipelines/perfmet.job_row``) — the runner itself writes
+   neither.  ``simulate`` runs 1–3 and skips every write
+   (storage.py:132-148's semantics), ``debug`` targets ``<layer>-test``
+   paths (config_app.py:21-28).
 """
 
 from __future__ import annotations
@@ -113,9 +120,11 @@ def run_stage(
 ) -> StageRun:
     """Execute one stage over its incremental plan.
 
-    Catalog rows for the target repo are upserted per processed slice
-    (S11); ``simulate`` runs planning + transform + count but writes
-    nothing; ``debug`` redirects the layer path to ``<layer>-test``.
+    The returned ``StageRun.catalog`` is the catalog with one row per
+    processed slice upserted for the target repo (S11) — a frame, not a
+    write: storing it and emitting the perfmet row are the caller's.
+    ``simulate`` runs planning + transform + count but writes nothing;
+    ``debug`` redirects the layer path to ``<layer>-test``.
     """
     t0 = time.perf_counter()
     src = cat.query(
@@ -128,38 +137,31 @@ def run_stage(
     tgt = cat.query(
         catalog_df, repository=stage.tgt_repo, data_source=stage.data_source
     )
-    plan = incremental_plan(
+    # the anti-join's only evaluation: every later use of the plan reads
+    # this LocalRelation and runs no job over the catalog
+    tbl = incremental_plan(
         src, tgt, force=force, last_run_date=last_run_date
-    )
-    # empty-plan gate: scans until the first row, not the whole plan
-    if plan.isEmpty():
+    ).toArrow()
+    planned = tbl.num_rows
+    if planned == 0:
         return StageRun(0, 0, time.perf_counter() - t0, simulate, catalog_df)
+    plan = spark.createDataFrame(tbl)
 
-    # metrics ride the ONE real action as observations (accumulator-backed
-    # CollectMetrics) instead of extra count() jobs — the old written =
-    # out.count() ran the whole transform a second time before the write
-    obs_planned = Observation()
-    obs_written = Observation()
-    out = stage.transform(
-        spark, plan.observe(obs_planned, F.count(F.lit(1)).alias("n"))
-    )
-
+    out = stage.transform(spark, plan)
     if simulate:
         out.count()  # the only action in simulate mode
         return StageRun(
-            int(obs_planned.get["n"]),
-            0,
-            time.perf_counter() - t0,
-            simulate,
-            catalog_df,
-            out,
+            planned, 0, time.perf_counter() - t0, simulate, catalog_df, out
         )
 
+    # the written count rides the write action as an observation
+    # (accumulator-backed CollectMetrics) instead of an extra count() job
+    # that would run the whole transform a second time
+    obs_written = Observation()
     out = out.observe(obs_written, F.count(F.lit(1)).alias("n"))
     layer = stage.tgt_repo + ("-test" if debug else "")
     write_layer(out, lake_root, layer, mode="overwrite",
                 partition_cols=stage.partition_cols)
-    planned = int(obs_planned.get["n"])
     written = int(obs_written.get["n"])
 
     new_rows = plan.select(

@@ -139,3 +139,21 @@ def test_debug_targets_test_layer(spark, catalog_df, tmp_path):
     assert run.written == 3
     assert (tmp_path / "lake" / "standardized-test").exists()
     assert not (tmp_path / "lake" / "standardized").exists()
+
+
+def test_run_stage_runs_the_plan_anti_join_once(spark, catalog_df, tmp_path):
+    """The plan is resolved once and handed on as a local relation: the
+    empty-plan gate, the planned count and the transform's rows all come
+    from that one evaluation, so the catalog is scanned once per side of
+    the anti-join (source and target listings), not once per consumer."""
+    acc = spark.sparkContext.accumulator(0)
+
+    def tick(it):
+        for pdf in it:
+            acc.add(len(pdf))
+            yield pdf
+
+    counted = catalog_df.mapInPandas(tick, schema=catalog_df.schema)
+    run = run_stage(spark, _stage(), counted, str(tmp_path / "lake"))
+    assert run.planned == 3 and run.written == 3
+    assert acc.value == 2 * catalog_df.count()

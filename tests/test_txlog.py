@@ -530,3 +530,87 @@ def test_read_table_merge_schema_additive_evolution(spark, table):
     assert set(evolved.columns) == {"k", "v", "note"}
     got = {r["k"]: r["note"] for r in evolved.collect()}
     assert got == {1: None, 2: "extra"}
+
+
+def test_merge_evaluates_source_once(spark, table):
+    """The source is written first and its keys are read back from
+    those files: a counting source's rows flow through exactly once,
+    even on the rewrite path (matched keys, carried rows)."""
+    txlog.append(
+        spark.createDataFrame([(1, "a"), (2, "b")], "k long, v string")
+        .coalesce(1),
+        table,
+    )
+    acc = spark.sparkContext.accumulator(0)
+
+    def tick(it):
+        for pdf in it:
+            acc.add(len(pdf))
+            yield pdf
+
+    src = spark.createDataFrame(
+        [(2, "B2"), (3, "c")], "k long, v string"
+    ).mapInPandas(tick, schema="k long, v string")
+    res = txlog.merge(spark, table, src, on=["k"])
+    assert res.removes == 1
+    assert acc.value == 2  # one pass over the two source rows
+    assert _rows(txlog.read_table(spark, table)) == [
+        (1, "a"), (2, "B2"), (3, "c"),
+    ]
+
+
+def test_merge_never_opens_files_whose_key_stats_miss(spark, table):
+    """The source's footer stats bound its keys; a snapshot file whose
+    recorded [min, max] misses that box is not a candidate, so it is
+    never opened — proven by overwriting it with garbage after its
+    commit.  The MERGE still lands with the right removes."""
+    a = spark.createDataFrame([(1, "a"), (2, "b")], "k long, v string")
+    b = spark.createDataFrame([(10, "x"), (11, "y")], "k long, v string")
+    txlog.append(a.coalesce(1), table)
+    far = txlog.append(b.coalesce(1), table)
+    canon = txlog._canon(table)
+    near = txlog._read_commit(canon, 1)["adds"]
+    (far_file,) = txlog._read_commit(canon, far.version)["adds"]
+    with open(os.path.join(canon, far_file), "wb") as f:
+        f.write(b"not a parquet file")
+
+    src = spark.createDataFrame([(2, "B2"), (3, "c")], "k long, v string")
+    res = txlog.merge(spark, table, src, on=["k"])
+    commit = txlog._read_commit(canon, res.version)
+    assert commit["removes"] == near
+    assert far_file not in commit["removes"]
+    landed = spark.read.parquet(
+        *[os.path.join(canon, f) for f in commit["adds"]]
+    )
+    assert _rows(landed) == [(1, "a"), (2, "B2"), (3, "c")]
+
+
+def test_merge_never_stats_prunes_float_keys(spark, table):
+    """Parquet writers may leave NaN out of a file's min/max, while
+    Spark's join matches NaN to NaN: a file whose recorded range misses
+    the source's must still be a candidate when the key is floating
+    point, or the MERGE would insert a second NaN row."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    canon = txlog._canon(table)
+    rel = os.path.join("data", "part-arrow.parquet")
+    os.makedirs(os.path.join(canon, "data"))
+    pq.write_table(
+        pa.table({"k": [1.0, float("nan")], "v": ["a", "n"]}),
+        os.path.join(canon, rel),
+    )
+    txlog.commit(table, [rel], [], "append", 0)
+    st = txlog.snapshot_stats(table)[os.path.join(canon, rel)]["k"]
+    assert st == {"min": 1.0, "max": 1.0}  # NaN left out of the stats
+
+    src = spark.createDataFrame(
+        [(5.0, "x"), (float("nan"), "N2")], "k double, v string"
+    )
+    res = txlog.merge(spark, table, src, on=["k"])
+    assert txlog._read_commit(canon, res.version)["removes"] == [rel]
+    got = {
+        ("nan" if r["k"] != r["k"] else r["k"]): r["v"]
+        for r in txlog.read_table(spark, table).collect()
+    }
+    assert got == {1.0: "a", 5.0: "x", "nan": "N2"}

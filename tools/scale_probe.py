@@ -22,6 +22,7 @@ from __future__ import annotations
 import argparse
 import json
 import os
+import re
 import sys
 import time
 
@@ -79,14 +80,21 @@ def gen() -> None:
          # shingles decorrelate across replicas (clean linear dedup
          # scaling) while the language-id stopword needles — and with
          # them the quality/lang gates — keep firing.  Stopword list
-         # from operators/text.STOPWORDS (all languages).
+         # from operators/text.STOPWORDS (all languages), each one
+         # re.escape'd so a metacharacter in a word stays literal.
+         # Caveat: the \b anchors assume a token starts and ends with a
+         # word character — a token with a leading `$` (or any other
+         # non-word character) is matched from its first word
+         # character on, and a stopword that starts or ends with `$`
+         # could never match at its \b.
          .withColumn(
              "text",
              F.regexp_replace(
                  F.col("text"),
                  F.lit(
                      r"\b(?!(?:" + "|".join(sorted({
-                         w for ws in _stopwords().values() for w in ws
+                         re.escape(w)
+                         for ws in _stopwords().values() for w in ws
                      })) + r")\b)(\S+)"
                  ),
                  F.concat(F.lit("$1r"), F.col("_rep").cast("string")),
