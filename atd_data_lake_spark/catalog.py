@@ -106,6 +106,29 @@ def earliest(catalog: DataFrame, **filters) -> DataFrame:
     return query(catalog, **filters).limit(1)
 
 
+def one_per_pk(updates: DataFrame) -> DataFrame:
+    """``updates`` reduced to ONE row per PK, in its own column order.
+
+    The winner among rows sharing a PK is the one with the latest
+    ``processing_date``, ties broken by the remaining non-key columns in
+    column order (greatest wins; NULL loses to any value).  The winner
+    is a function of the rows alone, not of their order, so the reduction
+    is an order-insensitive ``max`` aggregate: Catalyst drops any sort
+    beneath it (``catalog.query``'s ``orderBy``, with its range exchange
+    and sampling job), and a source already hash-partitioned on the PK
+    (``upsert``'s window) feeds it without another exchange."""
+    rest = [c for c in updates.columns if c not in PK]
+    rank = [c for c in rest if c == "processing_date"] + [
+        c for c in rest if c != "processing_date"
+    ]
+    return (
+        updates.groupBy(*PK)
+        .agg(F.max(F.struct(*rank)).alias("_win"))
+        .select(*[F.col(c) if c in PK else F.col(f"_win.{c}")
+                  for c in updates.columns])
+    )
+
+
 def upsert_table(spark, table_path: str, updates: DataFrame, commit_id=None):
     """The STORED form of :func:`upsert` — a real transactional
     ``MERGE INTO`` on the catalog's PK against an ``io/txlog``-managed
@@ -116,15 +139,17 @@ def upsert_table(spark, table_path: str, updates: DataFrame, commit_id=None):
     First call bootstraps the table from ``updates``.  Returns the
     :class:`io.txlog.CommitResult`.
 
-    ``updates`` is reduced to ONE row per PK first (dropDuplicates — a
-    re-delivered batch carrying the same PK twice must not store two
-    rows; matches :func:`upsert`'s one-winner-per-PK contract, where the
-    winner among same-batch duplicates is unspecified either way)."""
+    ``updates`` is reduced to ONE row per PK first (:func:`one_per_pk` —
+    a re-delivered batch carrying the same PK twice must not store two
+    rows; matches :func:`upsert`'s one-winner-per-PK contract).  Among
+    same-batch duplicates the latest ``processing_date`` wins, ties
+    broken by the other non-key columns, whatever order the rows came
+    in."""
     from atd_data_lake_spark.io import txlog
 
-    updates = updates.dropDuplicates(PK)
     # merge unconditionally — it handles the empty-table bootstrap via
     # commit(base=0), so a LOSING concurrent first writer gets
     # CommitConflict instead of the append path's auto-retry silently
     # double-inserting the same PKs
-    return txlog.merge(spark, table_path, updates, on=PK, commit_id=commit_id)
+    return txlog.merge(spark, table_path, one_per_pk(updates), on=PK,
+                       commit_id=commit_id)

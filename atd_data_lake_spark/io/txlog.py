@@ -18,9 +18,12 @@ nothing but parquet files and an append-only JSON commit log:
 A snapshot is the replay of adds/removes up to a version.  Readers
 resolve the snapshot ONCE (a driver-side listing of the log — metadata,
 not data) and then read a fixed file list: concurrent commits cannot
-tear a read.  Writers are copy-on-write: MERGE rewrites only files that
-contain matched keys, the log records file-level add/remove, and
-untouched files are never rewritten.
+tear a read.  The read's schema comes from the first file's footer,
+where Spark's writer stores it, so a snapshot read launches no
+schema-inference job (files without that footer key fall back to
+Spark's own inference).  Writers are copy-on-write: MERGE rewrites only
+files that contain matched keys, the log records file-level
+add/remove, and untouched files are never rewritten.
 
 Every commit also records per-file column MIN/MAX harvested from the
 parquet footers of its adds (zero data reads — the writer already
@@ -30,7 +33,11 @@ computed them).  Both sides use them:
   source is written first, its new files' footers bound its keys, and
   only snapshot files whose recorded ranges overlap that box are opened
   — an ``input_file_name`` semi-join over the candidates then confirms
-  which ones hold matched keys;
+  which ones hold matched keys.  Timestamps are written as INT64 (see
+  ``session.get_spark``), so a date-keyed source such as the catalog's
+  nightly advance misses every earlier day's file and the MERGE is a
+  plain append; legacy INT96 files carry no min/max and stay candidates
+  until :func:`compact` rewrites them;
 * ``pruned_files``/``read_where`` do query-side FILE SKIPPING: a
   selective range/equality predicate on a clustered-write column opens
   only overlapping files, with the residual predicate keeping results
@@ -72,6 +79,9 @@ _DATA_DIR = "data"
 # N commit JSONs + one checkpoint instead of the whole history — the
 # one remaining growth-with-history cost in the format (VERDICT r7).
 _CHECKPOINT_INTERVAL = 10
+
+# footer key under which Spark's parquet writer stores the row schema
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
 
 
 def _canon(table: str) -> str:
@@ -446,7 +456,7 @@ def read_where_multi(
         version = current_version(table)
     files = pruned_files_multi(table, predicates, version)
     if files:
-        df = spark.read.parquet(*files)
+        df = _read_files(spark, files)
     else:
         df = read_table(spark, table, version).limit(0)
     for col, (lo, hi) in predicates.items():
@@ -483,7 +493,7 @@ def read_where(
         version = current_version(table)
     files = pruned_files(table, column, lo, hi, version)
     if files:
-        df = spark.read.parquet(*files)
+        df = _read_files(spark, files)
     else:
         # schema still comes from the (non-empty) snapshot
         df = read_table(spark, table, version).limit(0)
@@ -510,6 +520,43 @@ def snapshot_files(table: str, version: int | None = None) -> list[str]:
     return [os.path.join(table, f) for f in _replay_active(table, version)]
 
 
+def _footer_schema(path: str):
+    """The Spark schema stored in ``path``'s parquet footer, or None when
+    the file carries no such key (not written by Spark) or it cannot be
+    read.  This is the schema Spark's own inference returns for the file,
+    so passing it to the reader skips the inference job: one local
+    footer read instead."""
+    import pyarrow.parquet as pq
+    from pyspark.sql import types as T
+
+    try:
+        raw = (pq.read_metadata(path).metadata or {}).get(_SPARK_SCHEMA_KEY)
+    except (OSError, ValueError):  # Spark's own read reports the damage
+        return None
+    if raw is None:
+        return None
+    try:
+        return T.StructType.fromJson(json.loads(raw))
+    except (ValueError, KeyError, TypeError):  # pre-JSON schema string
+        return None
+
+
+def _read_files(
+    spark: SparkSession, files: list[str], merge_schema: bool = False
+) -> DataFrame:
+    """``spark.read.parquet(*files)`` with the schema Spark's non-merging
+    inference would pick — the first file's — taken from that file's
+    footer without a job.  ``merge_schema`` and files lacking the footer
+    key go through Spark's inference as before."""
+    schema = None if merge_schema else _footer_schema(files[0])
+    reader = spark.read
+    if schema is not None:
+        reader = reader.schema(schema)
+    elif merge_schema:
+        reader = reader.option("mergeSchema", "true")
+    return reader.parquet(*files)
+
+
 def read_table(
     spark: SparkSession,
     table: str,
@@ -518,7 +565,8 @@ def read_table(
 ) -> DataFrame:
     """Snapshot read (time travel via ``version``).  The file list is
     resolved once, driver-side, so a concurrent commit cannot tear the
-    read; an empty snapshot raises (no schema to serve).
+    read; an empty snapshot raises (no schema to serve).  The schema is
+    the first snapshot file's, read from its footer (no Spark job).
 
     ``merge_schema=True`` unions the column sets across the snapshot's
     files (additive schema evolution, r7): a later append carrying new
@@ -528,10 +576,7 @@ def read_table(
     files = snapshot_files(table, version)
     if not files:
         raise ValueError(f"{table}: empty snapshot at version {version}")
-    reader = spark.read
-    if merge_schema:
-        reader = reader.option("mergeSchema", "true")
-    return reader.parquet(*files)
+    return _read_files(spark, files, merge_schema)
 
 
 def _reserve_version(table: str, version: int, payload: dict) -> None:
@@ -736,9 +781,7 @@ def _touched_removes(spark, table, files, keyset, on):
     scheme-variant paths on non-local filesystems) — committing with
     partial removes would duplicate matched keys instead of replacing
     them."""
-    snap = spark.read.parquet(*files).withColumn(
-        "_file", F.input_file_name()
-    )
+    snap = _read_files(spark, files).withColumn("_file", F.input_file_name())
     touched_rows = (
         snap.join(F.broadcast(keyset), on, "leftsemi")
         .select("_file")
@@ -835,8 +878,8 @@ def merge(
     those are rewritten (their unmatched rows carried over via
     anti-join, matched rows replaced by the source rows already
     written), as a second add.  Untouched files stay byte-identical.
-    Keys without usable stats (floating point, INT96 timestamps, a
-    failed harvest) simply don't prune; the semi-join stays exact
+    Keys without usable stats (floating point, legacy INT96 timestamps,
+    a failed harvest) simply don't prune; the semi-join stays exact
     either way, and source keys broadcast while they fit.  The stats
     of source and table are compared as values of one type: the
     source's key columns carry the table's column types, as the rows of
@@ -870,7 +913,7 @@ def merge(
     adds = new
     if removes:
         carried = (
-            spark.read.parquet(*[os.path.join(table, r) for r in removes])
+            _read_files(spark, [os.path.join(table, r) for r in removes])
             .join(F.broadcast(keys), on, "left_anti")
         )
         adds = new + _write_data_files(carried, table)
@@ -1079,7 +1122,7 @@ def delete_keys(
     if not removes:  # nothing matched: a no-op commit records the intent
         return commit(table, [], [], "delete", base, commit_id)
     carried = (
-        spark.read.parquet(*[os.path.join(table, r) for r in removes])
+        _read_files(spark, [os.path.join(table, r) for r in removes])
         .join(F.broadcast(keyset), on, "left_anti")
     )
     adds = _write_data_files(carried, table)
@@ -1120,7 +1163,7 @@ def compact(
     if not files:
         raise ValueError(f"{table}: nothing to compact (empty snapshot)")
     removes = sorted(os.path.relpath(p, table) for p in files)
-    snap = spark.read.parquet(*files).coalesce(target_files)
+    snap = _read_files(spark, files).coalesce(target_files)
     adds = _write_data_files(snap, table)
     return commit(table, adds, removes, "compact", base, commit_id)
 

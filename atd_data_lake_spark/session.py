@@ -12,6 +12,18 @@ Timezone note: the reference localizes everything to US/Central
 UTC-naive) the session timezone is pinned to UTC; pipeline code that
 needs the reference's wall-clock semantics converts explicitly with
 from_utc_timestamp/to_utc_timestamp instead of relying on session tz.
+
+Parquet timestamps are written as INT64 microseconds
+(``spark.sql.parquet.outputTimestampType=TIMESTAMP_MICROS``), not Spark's
+legacy INT96.  INT96 columns carry no footer min/max, so the commit-log
+stats ``io/txlog`` harvests could never bound a timestamp: the catalog
+MERGE could not prune its candidates by ``collection_date``, the one key
+that changes every night, and every earlier file of a layer stayed a
+candidate.  INT64 micros keeps the full precision of ``TimestampType``
+and is smaller on disk.  It is a session default because the writer
+ignores it as a per-write ``.option``.  Files written before it stay
+INT96 (stats-less, so they remain MERGE candidates) until
+``txlog.compact`` rewrites them.
 """
 
 from __future__ import annotations
@@ -49,6 +61,7 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.parquet.filterPushdown", "true")
+        .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "90g"))
         .config("spark.ui.enabled", "false")

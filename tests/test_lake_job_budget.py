@@ -1,5 +1,6 @@
-"""Spark-job budget for one nightly lake stage: ``runner.run_stage`` and
-the ``catalog.upsert_table`` MERGE that stores its catalog advance.
+"""Spark-job budget for one nightly lake stage: ``runner.run_stage``, the
+``catalog.upsert_table`` MERGE that stores its catalog advance, and the
+``txlog.read_table`` that reads the stored catalog back.
 
 A nightly stage moves one day, so its wall is the fixed count of Spark
 jobs it launches, not data volume.  This guard turns today's counts into
@@ -23,11 +24,14 @@ from atd_data_lake_spark import catalog as cat
 from atd_data_lake_spark.io import txlog
 from atd_data_lake_spark.runner import Stage, run_stage
 
-# jobs per call, as measured on the plan-once runner and the
-# stats-pruned single-pass MERGE (the re-planning runner ran 4 and the
-# two-pass MERGE 8 on the same catalog)
+# jobs per call, as measured on the plan-once runner, the sort-free
+# MERGE source whose INT64 collection_date prunes every earlier day's
+# file, and the footer-schema snapshot read (the re-planning runner ran
+# 4, the two-pass MERGE 8 and the INT96 single-pass MERGE 5 on the same
+# catalog; the inferring snapshot read ran 1)
 RUN_STAGE_JOBS = 3
-UPSERT_TABLE_JOBS = 5
+UPSERT_TABLE_JOBS = 2
+READ_TABLE_JOBS = 0
 
 
 def _row(repo: str, day: int):
@@ -77,7 +81,16 @@ def test_nightly_stage_job_budget(spark, tmp_path):
         lambda: cat.upsert_table(spark, table, updates),
     )
     assert res.removes == 0
-    assert txlog.read_table(spark, table).count() == len(rows) + 1
+    stored, read_jobs = _jobs(
+        spark, "budget/read_table", lambda: txlog.read_table(spark, table),
+    )
+    assert stored.count() == len(rows) + 1
+
+    # the MERGE source keeps query's sort out of its plan: no range
+    # exchange, so no sampling job
+    plan = cat.one_per_pk(updates)._jdf.queryExecution().executedPlan()
+    assert "rangepartitioning" not in plan.toString()
 
     assert run_jobs <= RUN_STAGE_JOBS, run_jobs
     assert upsert_jobs <= UPSERT_TABLE_JOBS, upsert_jobs
+    assert read_jobs <= READ_TABLE_JOBS, read_jobs

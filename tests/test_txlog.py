@@ -264,6 +264,37 @@ def test_upsert_table_dedupes_pk_within_batch(spark, table):
     assert len(out) == 1
 
 
+@pytest.mark.parametrize("order", [1, -1])
+def test_upsert_table_same_batch_winner_is_deterministic(spark, tmp_path, order):
+    """Among same-batch rows for one PK the latest ``processing_date``
+    wins, ties broken by the other non-key columns in column order —
+    whichever order the rows arrive in."""
+    import datetime
+
+    from atd_data_lake_spark import catalog as cat
+
+    def row(base, pointer, processed):
+        return ("raw", "bt", base, "csv", pointer,
+                datetime.datetime(2020, 1, 1), None,
+                datetime.datetime(2020, 1, processed), None)
+
+    batch = [
+        row("f1", "z-older", 2), row("f1", "a-newer", 3),
+        row("f2", "a", 2), row("f2", "b", 2), row("f2", None, 2),
+    ][::order]
+    table = str(tmp_path / f"tbl{order}")
+    cat.upsert_table(
+        spark, table, spark.createDataFrame(batch, cat.CATALOG_SCHEMA)
+    )
+    out = txlog.read_table(spark, table).select(
+        "id_base", "pointer", "processing_date"
+    ).collect()
+    assert sorted(tuple(r) for r in out) == [
+        ("f1", "a-newer", datetime.datetime(2020, 1, 3)),
+        ("f2", "b", datetime.datetime(2020, 1, 2)),
+    ]
+
+
 def test_stray_files_in_log_dir_are_ignored(spark, table):
     """A non-version file in _txlog/ (editor artifact, backup) must not
     brick reads or commits (r6 advice: int(name[1:-5]) raised)."""
@@ -530,6 +561,53 @@ def test_read_table_merge_schema_additive_evolution(spark, table):
     assert set(evolved.columns) == {"k", "v", "note"}
     got = {r["k"]: r["note"] for r in evolved.collect()}
     assert got == {1: None, 2: "extra"}
+    strict = txlog.read_table(spark, table)
+    assert strict.columns == ["k", "v"]
+    assert _rows(strict) == [(1, "a"), (2, "b")]
+
+
+def test_read_table_schema_is_the_inferred_one_without_a_job(spark, table):
+    """The snapshot schema comes from the first file's footer: it equals
+    what Spark's inference returns — every field nullable, even where the
+    written frame declared NOT NULL — and costs no Spark job."""
+    import datetime
+
+    from atd_data_lake_spark import catalog as cat
+
+    row = ("raw", "bt", "f1", "csv", "p1", datetime.datetime(2020, 1, 1),
+           None, None, None)
+    txlog.append(spark.createDataFrame([row], cat.CATALOG_SCHEMA), table)
+    txlog.append(spark.createDataFrame([row], cat.CATALOG_SCHEMA), table)
+    inferred = spark.read.parquet(*txlog.snapshot_files(table)).schema
+    assert all(f.nullable for f in inferred.fields)
+
+    sc = spark.sparkContext
+    sc.setJobGroup("read_table_schema", "read_table_schema")
+    try:
+        got = txlog.read_table(spark, table)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert got.schema == inferred
+    assert sc.statusTracker().getJobIdsForGroup("read_table_schema") == []
+    assert got.count() == 2
+
+
+def test_read_table_without_spark_footer_key_infers(spark, table):
+    """A snapshot written by another parquet writer has no Spark schema
+    in its footer; the read falls back to Spark's inference."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    canon = txlog._canon(table)
+    rel = os.path.join("data", "part-arrow.parquet")
+    os.makedirs(os.path.join(canon, "data"))
+    pq.write_table(pa.table({"k": [1, 2], "v": ["a", "b"]}),
+                   os.path.join(canon, rel))
+    txlog.commit(table, [rel], [], "append", 0)
+    assert txlog._footer_schema(os.path.join(canon, rel)) is None
+    got = txlog.read_table(spark, table)
+    assert got.schema.simpleString() == "struct<k:bigint,v:string>"
+    assert _rows(got) == [(1, "a"), (2, "b")]
 
 
 def test_merge_evaluates_source_once(spark, table):

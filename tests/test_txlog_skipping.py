@@ -290,3 +290,111 @@ def test_stats_replay_falls_back_to_older_checkpoint(spark, tmp_path):
     assert all(f in stats for f in active)
     # and pruning over the recovered stats still works
     assert len(txlog.pruned_files(table, "v", 15.0, 15.0)) == 1
+
+
+# ---------------------------------------------------------------------------
+# INT64 timestamps: the catalog's collection_date prunes its MERGE
+# ---------------------------------------------------------------------------
+
+
+def test_session_timestamp_key_records_min_max(spark, tmp_path):
+    """The session writes ``TimestampType`` as INT64, so a timestamp
+    column's footer has min/max and the commit records them."""
+    import datetime
+
+    import pyarrow.parquet as pq
+
+    table = str(tmp_path / "tbl")
+    rows = [(i, datetime.datetime(2024, 3, 1, i, 30, 0, 250)) for i in range(4)]
+    txlog.append(
+        spark.createDataFrame(rows, "id long, ts timestamp").coalesce(1),
+        table,
+    )
+    (path,) = txlog.snapshot_files(table)
+    assert pq.ParquetFile(path).schema.column(1).physical_type == "INT64"
+    assert txlog.snapshot_stats(table)[path]["ts"] == {
+        "min": "2024-03-01T00:30:00.000250",
+        "max": "2024-03-01T03:30:00.000250",
+    }
+
+
+def _catalog_row(repo, day):
+    import datetime
+
+    return (repo, "wt", "kits", "csv", f"/lake/{repo}",
+            datetime.datetime(2019, 12, day), None,
+            datetime.datetime(2020, 1, 1), "{}")
+
+
+def test_new_day_catalog_merge_opens_no_snapshot_file(spark, tmp_path):
+    """A nightly catalog advance carries a new ``collection_date``, whose
+    key box misses every earlier file's recorded range: the MERGE opens
+    no snapshot file — proven by overwriting them all with garbage after
+    their commits — and lands as a plain append."""
+    from atd_data_lake_spark import catalog as cat
+
+    table = str(tmp_path / "catalog")
+    for repo in ("raw", "standardized"):
+        cat.upsert_table(
+            spark, table,
+            spark.createDataFrame([_catalog_row(repo, 1)], cat.CATALOG_SCHEMA),
+        )
+    for path in txlog.snapshot_files(table):
+        with open(path, "wb") as f:
+            f.write(b"not a parquet file")
+
+    res = cat.upsert_table(
+        spark, table,
+        spark.createDataFrame([_catalog_row("standardized", 2)],
+                              cat.CATALOG_SCHEMA),
+    )
+    canon = txlog._canon(table)
+    commit = txlog._read_commit(canon, res.version)
+    assert commit["removes"] == []
+    landed = spark.read.parquet(
+        *[os.path.join(canon, f) for f in commit["adds"]]
+    )
+    assert [(r.repository, r.collection_date.day) for r in landed.collect()] \
+        == [("standardized", 2)]
+
+
+def test_legacy_int96_file_reads_exact_and_stays_a_merge_candidate(
+    spark, tmp_path
+):
+    """A snapshot still holding an INT96 file (no footer min/max) beside
+    INT64 ones reads back exact timestamps, and a MERGE matching a key
+    in it still removes it: missing stats keep a file a candidate, while
+    the INT64 file of another day is pruned."""
+    import datetime
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    table = str(tmp_path / "tbl")
+    canon = txlog._canon(table)
+    old_ts = [datetime.datetime(2019, 12, 1, 6, 30, 0, 123457),
+              datetime.datetime(2019, 12, 1, 7, 0, 0, 1)]
+    rel = os.path.join("data", "part-int96.parquet")
+    os.makedirs(os.path.join(canon, "data"))
+    pq.write_table(
+        pa.table({"ts": pa.array(old_ts, pa.timestamp("us")),
+                  "v": ["a", "b"]}),
+        os.path.join(canon, rel),
+        use_deprecated_int96_timestamps=True,
+    )
+    txlog.commit(table, [rel], [], "append", 0)
+    assert "ts" not in txlog.snapshot_stats(table)[os.path.join(canon, rel)]
+    new_ts = datetime.datetime(2019, 12, 5, 0, 0, 0, 999999)
+    txlog.append(
+        spark.createDataFrame([(new_ts, "c")], "ts timestamp, v string")
+        .coalesce(1),
+        table,
+    )
+    assert sorted(tuple(r) for r in txlog.read_table(spark, table).collect()) \
+        == [(old_ts[0], "a"), (old_ts[1], "b"), (new_ts, "c")]
+
+    src = spark.createDataFrame([(old_ts[1], "B2")], "ts timestamp, v string")
+    res = txlog.merge(spark, table, src, on=["ts"])
+    assert txlog._read_commit(canon, res.version)["removes"] == [rel]
+    assert sorted(tuple(r) for r in txlog.read_table(spark, table).collect()) \
+        == [(old_ts[0], "a"), (old_ts[1], "B2"), (new_ts, "c")]
